@@ -10,8 +10,15 @@ object Bench {
     * `fileJson` writer below, so a format change breaks a test instead
     * of silently disarming the guard.
     */
-  private[graft] def parseBaseline(json: String): Map[String, Double] = {
-    val marker = "\"queries\":{"
+  private[graft] def parseBaseline(json: String): Map[String, Double] =
+    parseNumMap(json, "queries")
+
+  /** The flat `"name":{"k":v,…}` number map of a record, by the same
+    * tolerant rules as [[parseBaseline]] (the first map of that name).
+    */
+  private[graft] def parseNumMap(json: String,
+                                 name: String): Map[String, Double] = {
+    val marker = "\"" + name + "\":{"
     val at = json.indexOf(marker)
     if (at < 0) Map.empty
     else {
@@ -233,6 +240,13 @@ object Bench {
     * burn the bounded retry budget on noise, while the historical-min
     * anchor never ratchets and successive records' drift maps make a
     * compounding drift monotone and visible instead of silent.
+    *
+    * `codegen` maps each query to (generated-class compiles, JIT ms)
+    * over all its reps and retries, written as the `codegen_compiles`
+    * and `jit_ms` maps. Spark's codegen cache holds 100 classes, so a
+    * query whose warm reps still compile, and burn JIT time, is one
+    * whose plan shapes overrun it — a cost wall time alone cannot
+    * attribute.
     */
   private[graft] def fileJson(results: Seq[(String, Double)],
                               canaryStart: Seq[(String, Double)],
@@ -250,7 +264,8 @@ object Bench {
                               canaryEndMs: Long = 0L,
                               guardDisarmed: Boolean = false,
                               anomalyCtx: Seq[(String, (Int, Int, String))]
-                                = Nil)
+                                = Nil,
+                              codegen: Seq[(String, (Long, Long))] = Nil)
       : String = {
     def runsMap(xs: Seq[(String, Seq[Double])]): String =
       xs.map { case (k, runs) =>
@@ -265,6 +280,9 @@ object Bench {
       jstr(k) + ":" + String.format(java.util.Locale.ROOT, "%.2f",
         Double.box(r))
     }.mkString("{", ",", "}")
+    def longMap(f: ((Long, Long)) => Long): String =
+      codegen.map { case (k, c) => jstr(k) + ":" + f(c) }
+        .mkString("{", ",", "}")
     val ctxMap = anomalyCtx.map { case (k, (nb, infl, v)) =>
       jstr(k) + s""":{"neighbors":$nb,"inflated":$infl,"verdict":${jstr(v)}}"""
     }.mkString("{", ",", "}")
@@ -273,8 +291,34 @@ object Bench {
       s""","reps":$reps,"samples":${runsMap(samples)},"retries":${
         runsMap(retries)},"memo":$memoMap,"started":$startedMap,"drift":${
         driftMap},"canary_start_ms":$canaryStartMs,"canary_end_ms":${
-        canaryEndMs},"anomaly_context":$ctxMap}"""
+        canaryEndMs},"anomaly_context":$ctxMap,"codegen_compiles":${
+        longMap(_._1)},"jit_ms":${longMap(_._2)}}"""
   }
+
+  /** (generated-class compiles, JIT ms) since JVM start: Spark's
+    * codegen compile counter and the JVM's total JIT compilation time
+    * (0 when the JVM runs without a JIT).
+    */
+  private[graft] def codegenCounters(): (Long, Long) = {
+    val jit = java.lang.management.ManagementFactory.getCompilationMXBean
+    (org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount,
+      if (jit == null) 0L else jit.getTotalCompilationTime)
+  }
+
+  /** Write the full record, reporting a failure instead of swallowing
+    * it: the record at this path anchors the next run's guard, so a
+    * silently failed write leaves a stale anchor. `main` exits non-zero
+    * when this returns false.
+    */
+  private[graft] def writeRecord(path: String, json: String): Boolean =
+    try {
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(path), json)
+      true
+    } catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[bench] ERROR record write to $path failed: $e")
+      false
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -411,6 +455,7 @@ object Bench {
     val canaryStart = runCanary("start")
     val measured = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       val startedMs = System.currentTimeMillis()
+      val (compiles0, jit0) = codegenCounters()
       val runs = (1 to reps).map(_ => oneRun(name, fn))
       // outlier guard: a min-of-reps far above the historical baseline
       // means ALL reps landed in a contended window — re-run (bounded)
@@ -437,17 +482,19 @@ object Bench {
           " retries=" + retryRuns.map(r => f"$r%.3f").mkString(",")
         else ""} pins=${
         graft.std.Materialize.pinCount} storageMB=$storageUsedMb")
-      (name, runs, retryRuns, startedMs)
+      val (compiles1, jit1) = codegenCounters()
+      (name, runs, retryRuns, startedMs,
+        (compiles1 - compiles0, jit1 - jit0))
     }
     def allMin(runs: Seq[Double], retries: Seq[Double]): Double = {
       val ok = (runs ++ retries).filter(_ >= 0)
       if (ok.isEmpty) -1.0 else ok.min
     }
     val anomalous = measured.collect {
-      case (name, runs, rts, _)
+      case (name, runs, rts, _, _)
         if isAnomalous(allMin(runs, rts), baseline.get(name)) => name
     }
-    val results = measured.map { case (name, runs, rts, _) =>
+    val results = measured.map { case (name, runs, rts, _, _) =>
       name -> allMin(runs, rts)
     }
     // min-of-reps must not mask intermittent failures: a query that
@@ -455,11 +502,11 @@ object Bench {
     // runs don't count here (r16 advice) — a retry failure stays
     // visible in the `retries` map without tainting a clean rep set.
     val flaky = measured.collect {
-      case (name, runs, _, _)
+      case (name, runs, _, _, _)
         if runs.contains(-1.0) && runs.exists(_ >= 0) => name
     }
     val retries = measured.collect {
-      case (name, _, rts, _) if rts.nonEmpty => (name, rts.toSeq)
+      case (name, _, rts, _, _) if rts.nonEmpty => (name, rts.toSeq)
     }
     // drift-vs-historical-min per baselined query (see fileJson doc):
     // the record's own readout of the sub-threshold regime the retry
@@ -495,13 +542,14 @@ object Bench {
     // complete per-query record is always recoverable.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       defaultOut(sfDir))
-    val samples = measured.map { case (name, runs, _, _) => (name, runs) }
-    val started = measured.map { case (name, _, _, ms) => (name, ms) }
+    val samples = measured.map { case (name, runs, _, _, _) => (name, runs) }
+    val started = measured.map { case (name, _, _, ms, _) => (name, ms) }
+    val codegen = measured.map { case (name, _, _, _, c) => (name, c) }
     // record-time adjudication of each anomalous flag (see
     // anomalyContext): span = first-rep start + every rep AND retry
     // duration (retries occupy the wall clock too — the r19
     // bench_timeline advice applied at the source)
-    val spans = measured.map { case (name, runs, rts, ms) =>
+    val spans = measured.map { case (name, runs, rts, ms, _) =>
       val dur = (runs ++ rts).filter(_ >= 0).sum
       (name, ms, ms + (dur * 1000).toLong)
     }
@@ -511,12 +559,11 @@ object Bench {
         s"[bench] anomaly $name: $infl/$nb overlapping queries inflated" +
           s" — $v")
     }
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outPath),
+    val written = writeRecord(outPath,
       fileJson(results, canaryStart, canaryEnd, flaky, anomalous,
         outPath, sfDir, reps, samples, retries, memoStats, started,
-        drift, canaryStartMs, canaryEndMs, guardDisarmed, anomCtx))
-    catch { case _: Throwable => () }
+        drift, canaryStartMs, canaryEndMs, guardDisarmed, anomCtx,
+        codegen))
     println(headJson(results, canaryStart, canaryEnd, flaky, anomalous,
       outPath, sfDir,
       v => String.format(java.util.Locale.ROOT, "%.3f", Double.box(v)),
@@ -525,5 +572,6 @@ object Bench {
     // before stop — keeps the pin lifecycle honest end-to-end
     graft.std.SessionMemo.releaseSession(spark)
     spark.stop()
+    if (!written) sys.exit(1)
   }
 }

@@ -2,8 +2,25 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Exits non-zero
+  * when any query failed, after dumping all the others. */
 object Verify {
+  /** Run every dump in order, logging a failed one and going on to the
+    * next, freeing each one's pins; returns the names that failed.
+    */
+  private[graft] def dumpAll(dumps: Seq[(String, () => Unit)]): Seq[String] =
+    dumps.flatMap { case (name, dump) =>
+      val failed =
+        try { dump(); None }
+        catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
+        }
+      // free this query's materialize-once pins (see Bench)
+      graft.std.Materialize.releaseAll()
+      failed
+    }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -28,16 +45,11 @@ object Verify {
     val selectedKey: String => Boolean =
       sys.env.get("SPARK_GRAFT_ONLY").map(SparkEntry.keyMatcher)
         .getOrElse(_ => true)
-    SparkEntry.queries.filter(e => selectedKey(e._1)).foreach {
-      case (name, fn) =>
-      try fn(spark, sfDir).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // free this query's materialize-once pins (see Bench)
-      graft.std.Materialize.releaseAll()
-    }
+    val failed = dumpAll(SparkEntry.queries.toSeq
+      .filter(e => selectedKey(e._1)).map { case (name, fn) =>
+        name -> (() => fn(spark, sfDir).write.mode("overwrite")
+          .parquet(s"$outDir/$name"))
+      })
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -56,5 +68,10 @@ object Verify {
     // free the session memos (see graft.std.SessionMemo) before stop
     graft.std.SessionMemo.releaseSession(spark)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

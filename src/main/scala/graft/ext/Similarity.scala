@@ -1119,40 +1119,6 @@ object Similarity {
   // Deterministic k-means (s18): the TRAINER FAISS runs before IVF/PQ.
   // -------------------------------------------------------------------
 
-  /** One Lloyd training loop over an exploded (`_vid`, `_sub`, `_dim`,
-    * `_x`) frame — the generalized trainer behind [[kmeansTrain]] and
-    * [[ivfPqTopKTrained]]: with one subspace it trains the IVF coarse
-    * quantizer; with `m` subspaces it trains all `m` per-subspace PQ
-    * codebooks in the SAME loop (subspace is just a group key, so the
-    * m trainings share every scan and shuffle).
-    *
-    * Init is "random partition": cluster = `hash64(tag|sub|vid) mod k`
-    * — deterministic across runs, partitionings, and engines (the
-    * repo's no-RNG rule; the DuckDB twin computes the identical md5
-    * lane). Each iteration then (a) recomputes centroids as 6-dp
-    * DECIMAL-exact means of the current members (the s3 discipline —
-    * a double mean varies in the last ulps with partial-agg order,
-    * which would fork the whole training run) and (b) reassigns every
-    * (entity, subspace) to its nearest centroid by DECIMAL(38,12)-
-    * exact squared L2 with ties to the smallest cluster id
-    * ([[pqNearestCodewords]] — the same kernel PQ encode uses). A
-    * cluster that loses all members simply drops out of the codebook
-    * (deterministic in both engines; FAISS logs-and-splits instead —
-    * a policy choice, not a correctness one).
-    *
-    * 100 TB shape: per iteration, ONE broadcast equi-join of the
-    * exploded corpus with the |clusters| × dims codebook (k is a
-    * CONSTANT of the index — the s16 sizing contract) and two partial
-    * aggregations; iterations are a fixed small count. Production
-    * trains on a bounded SAMPLE (FAISS trains IVF/PQ on ~1M vectors
-    * regardless of corpus size) and encodes the full corpus once —
-    * pass the sample as `ex` and this loop never touches the rest.
-    *
-    * Returns (codebook, assignment): codebook `(_cw, _dim, _c)` after
-    * `iters` update+assign rounds; assignment `(_vid, _sub, _cw,
-    * _dist, _nd)` = each (entity, subspace)'s nearest trained
-    * centroid with its exact squared distance.
-    */
   /** Session memo for trained quantizers — the d5–d7 lifecycle applied
     * to the ANN index: in production the index is trained ONCE at
     * write time and queried many times, so the drivers' per-query
@@ -1190,35 +1156,116 @@ object Similarity {
       (cb, assign)
   }
 
+  /** One Lloyd training loop over an exploded (`_vid`, `_sub`, `_dim`,
+    * `_x`) frame — the generalized trainer behind [[kmeansTrain]] and
+    * [[ivfPqTopKTrained]]: with one subspace it trains the IVF coarse
+    * quantizer; with `m` subspaces it trains all `m` per-subspace PQ
+    * codebooks in the SAME loop (each subspace is one chain of
+    * [[kmeansChains]], so the m trainings share every scan and
+    * shuffle).
+    *
+    * Init is "random partition": cluster = `hash64(tag|sub|vid) mod k`
+    * — deterministic across runs, partitionings, and engines (the
+    * repo's no-RNG rule; the DuckDB twin computes the identical md5
+    * lane).
+    *
+    * Returns (codebook, assignment): codebook `(_cw, _dim, _c)` after
+    * `iters` update+assign rounds; assignment `(_vid, _sub, _cw,
+    * _dist, _nd)` = each (entity, subspace)'s nearest trained
+    * centroid with its exact squared distance.
+    */
   private def kmeansLoop(ex: DataFrame, k: Int, iters: Int,
                          seedTag: String): (DataFrame, DataFrame) = {
     require(k >= 1, "need k >= 1")
+    val (cb, assign) = kmeansChains(
+      graft.std.Materialize.once(kmeansVectors(ex)),
+      kmeansInit(lit(seedTag), col("_sub"), lit(k)), iters)
+    (cb.drop("_sub"), assign)
+  }
+
+  /** An exploded (`_vid`, `_sub`, `_dim`, `_x`) frame at vector grain:
+    * one row per (entity, subspace) with its `(_dim, _x)` pairs in
+    * `_xs`, in any order (the loop's sums are exact).
+    */
+  private def kmeansVectors(ex: DataFrame): DataFrame =
+    ex.groupBy(col("_vid"), col("_sub"))
+      .agg(collect_list(struct(col("_dim"), col("_x"))).as("_xs"))
+
+  /** The hash-mod init cluster `hash64(tag|sub|vid) mod k` of a row. */
+  private def kmeansInit(tag: Column, sub: Column, k: Column): Column =
+    (TextOps.hash64(concat_ws("|", tag, sub.cast("string"),
+      col("_vid").cast("string"))) % k).cast("int")
+
+  /** Lloyd's algorithm over many independent chains at once. `vs` has
+    * one (`_vid`, `_sub`, `_xs`) row per entity and chain — `_sub` is
+    * the chain key (a PQ subspace, or one k of the elbow sweep) — and
+    * must be cheap to re-read (pinned, or a broadcast join over a
+    * pin); `init` is each row's round-0 cluster.
+    *
+    * Each round is ONE query with one tiny shuffle, shared by every
+    * chain:
+    *  - update: the previous assignment, explode the pairs, and
+    *    per-(chain, cluster, dim) 6-dp DECIMAL-exact member means (the
+    *    s3 discipline — a double mean varies in the last ulps with
+    *    partial-agg order, which would fork the whole training run),
+    *    collected to the driver (chains × k × dims rows);
+    *  - assign: [[KmeansAssign]] against that codebook at vector
+    *    grain — DECIMAL(38,12)-exact squared L2, ties to the smallest
+    *    cluster id, bit-identical to the exploded join + SUM + window
+    *    argmin ([[pqNearestCodewords]]) it replaces. The next round's
+    *    update (or the returned assignment) evaluates it in the same
+    *    scan, so no assignment frame is ever materialized.
+    * A cluster that loses all members simply drops out of the codebook
+    * (deterministic in both engines; FAISS logs-and-splits instead — a
+    * policy choice, not a correctness one). Every row keeps an
+    * assignment: its previous cluster's centroid carries all its dims.
+    *
+    * 100 TB shape: the only corpus-sized work per round is one scan
+    * and a partial aggregation to a |chains| × k × dims codebook (k is
+    * a CONSTANT of the index — the s16 sizing contract); iterations
+    * are a fixed small count. Production trains on a bounded SAMPLE
+    * (FAISS trains IVF/PQ on ~1M vectors regardless of corpus size)
+    * and encodes the full corpus once — pass the sample and this loop
+    * never touches the rest.
+    *
+    * Returns (codebook `(_sub, _cw, _dim, _c)`, assignment `(_vid,
+    * _sub, _cw, _dist, _nd)`).
+    */
+  private def kmeansChains(vs: DataFrame, init: Column, iters: Int)
+      : (DataFrame, DataFrame) = {
     require(iters >= 1, "need iters >= 1")
-    var assign = ex.select(col("_vid"), col("_sub")).distinct()
-      .withColumn("_cw",
-        (TextOps.hash64(concat_ws("|", lit(seedTag),
-          col("_sub").cast("string"), col("_vid").cast("string")))
-          % k).cast("int"))
+    val spark = vs.sparkSession
+    val ansi = spark.conf.get("spark.sql.ansi.enabled").toBoolean
+    def assign(book: graft.functions.KmeansBook): Column =
+      org.apache.spark.sql.GraftColumns.kmeansAssign(
+        col("_xs"), col("_sub"), book)
+    // round 1 runs against an empty book, so every row keeps its init
+    // cluster and all rounds share one plan shape (one codegen entry)
+    var book = graft.functions.KmeansBook(Nil, ansi)
     var cb: DataFrame = null
     for (_ <- 1 to iters) {
-      // update: 6-dp DECIMAL-exact member means (codebook is tiny —
-      // pinning it each round cuts the iteration lineage at a
-      // |clusters| × dims frame, the pageRankLoop discipline)
-      cb = graft.std.Materialize.once(
-        ex.join(assign.select(col("_vid"), col("_sub"), col("_cw")),
-            Seq("_vid", "_sub"))
-          .groupBy(col("_cw"), col("_dim"))
-          .agg(round(sum(col("_x").cast("decimal(38,18)")).cast("double") /
-            count(lit(1)), 6).as("_c")))
-      // assign: nearest centroid, exact distances, ties to smallest id
-      assign = pqNearestCodewords(ex, cb)
+      val upd = vs.select(col("_sub"),
+          coalesce(assign(book).getField("_cw"), init).as("_cw"),
+          explode(col("_xs")).as("_p"))
+        .groupBy(col("_sub"), col("_cw"), col("_p._dim").as("_dim"))
+        .agg(round(sum(col("_p._x").cast("decimal(38,18)")).cast("double") /
+          count(lit(1)), 6).as("_c"))
+      val rows = upd.collect()
+        .sortBy(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
+      cb = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+        upd.schema)
+      book = graft.functions.KmeansBook(rows.toSeq.map(r =>
+        (r.getInt(0), r.getInt(1), r.getLong(2),
+          if (r.isNullAt(3)) Double.NaN else r.getDouble(3))), ansi)
     }
-    (cb, assign)
+    (cb, vs.select(col("_vid"), col("_sub"), assign(book).as("_r"))
+      .select(col("_vid"), col("_sub"), col("_r._cw"), col("_r._dist"),
+        col("_r._nd")))
   }
 
   /** Deterministic k-means training report (s18): Lloyd's algorithm
     * over the embedding corpus, `iters` update+assign rounds from the
-    * hash-mod init (see [[kmeansLoop]] for the exact fixed-point
+    * hash-mod init (see [[kmeansChains]] for the exact fixed-point
     * discipline). With `subspaces` > 1 the same call trains the m
     * per-subspace PQ codebooks at once.
     *
@@ -1235,21 +1282,8 @@ object Similarity {
                   seedTag: String = "km",
                   memoTag: Option[String] = None): DataFrame = {
     require(subspaces >= 1, "need at least one subspace")
-    kmeansTrainEx(graft.std.Materialize.once(
-      pqExplode(vecs, subspaces, idCol, vecCol)),
-      subspaces, k, iters, seedTag, memoTag)
-  }
-
-  /** [[kmeansTrain]] over an ALREADY-exploded (and pinned) frame —
-    * the entry point for callers that train several codebooks from
-    * one corpus scan ([[kmeansElbow]] pins one exploded frame and
-    * sweeps k over it; re-exploding per k was the sweep's dominant
-    * repeated cost).
-    */
-  private def kmeansTrainEx(ex: DataFrame, subspaces: Int, k: Int,
-                            iters: Int, seedTag: String,
-                            memoTag: Option[String]): DataFrame = {
-    val (cb, assign) = kmeansLoopShared(ex, k, iters, seedTag, memoTag)
+    val (cb, assign) = kmeansLoopShared(graft.std.Materialize.once(
+      pqExplode(vecs, subspaces, idCol, vecCol)), k, iters, seedTag, memoTag)
     val stats = assign.groupBy(col("_sub"), col("_cw"))
       .agg(count(lit(1)).as("n_members"),
         round(sum(col("_dist")).cast("double"), 9).as("wcss"))
@@ -1269,91 +1303,50 @@ object Similarity {
     * elbow is where the marginal drop flattens — and collapsed or
     * runt cells show up in the size extremes before an index ships).
     *
-    * Determinism: per-cluster WCSS is the kmeansLoop fixed-point
-    * value (exact DECIMAL distance totals, one 9-dp round); the
-    * cross-cluster total re-sums those 9-dp values as DECIMAL(28,9) —
-    * order-free — and rounds once for display. Each k trains from its
-    * own hash seed (`el$k`), so runs are independent and the DuckDB
-    * twin unrolls each chain by tag.
+    * ONE [[kmeansChains]] call trains every k: each k is a chain over
+    * the same pinned vectors (a broadcast cross join with the |ks|
+    * chain keys), with its own init `hash64(el$k|0|vid) mod k` — the
+    * seed [[kmeansTrain]] uses with `seedTag = s"el$k"`, so each chain
+    * is exactly that training and the DuckDB twin unrolls each chain
+    * by tag. All k share each round's scan, shuffle and job.
     *
-    * 100 TB shape: Σ over ks of the kmeansLoop contract (sample-
-    * bounded training in production, broadcast codebooks); the elbow
-    * frame itself is |ks| rows.
+    * Determinism: per-cluster WCSS is the trainer's fixed-point value
+    * (exact DECIMAL distance totals, one 9-dp round); the cross-cluster
+    * total re-sums those 9-dp values as DECIMAL(28,9) — order-free —
+    * and rounds once for display.
+    *
+    * 100 TB shape: the [[kmeansChains]] contract with |ks| chains
+    * (sample-bounded training in production); the elbow frame itself
+    * is |ks| rows.
     */
-  /* MEASURED (r22, plans/r22/scaling_sf0.4x.json + profiles): on a
-   * 4×-replicated corpus the sweep ANTI-SCALES 8→32 cores (5.5 s @8c
-   * vs 10.7 s @32c warm, clean sessions). The profile pins the
-   * mechanism: the SAME work reads 23 s of task-time at 8 cores but
-   * 251 s at 32 — an ~11× CPU inflation, i.e. the 32-core run pays
-   * allocation/GC pressure from 32 concurrent DECIMAL(38,18)-heavy
-   * aggregation tasks across the four training chains, not idle
-   * cores. Named follow-up: cut the per-row DECIMAL allocation in the
-   * distance/update kernel (exact scaled longs where range allows,
-   * keeping the oracle's fixed-point values bit-identical) before any
-   * batching of the k's — the batch rewrite alone would not touch the
-   * allocation rate that actually burns the cores. */
   def kmeansElbow(vecs: DataFrame, ks: Seq[Int] = Seq(2, 4, 8, 16),
                   iters: Int = 4, idCol: String = "vec_id",
                   vecCol: String = "embedding"): DataFrame = {
     require(ks.nonEmpty, "need at least one k")
-    // ONE pinned exploded frame feeds every k: the per-k trainings
-    // differ only in their hash seed, so re-running pqExplode per k
-    // (the pre-r14 shape) repeated the sweep's one corpus-sized scan
-    // |ks| times for nothing
-    val ex = graft.std.Materialize.once(
-      pqExplode(vecs, 1, idCol, vecCol))
-    // the per-k trainings are independent job chains whose cost is
-    // dominated by per-iteration scheduling, not data (the loop pins
-    // a tiny codebook each round) — run them CONCURRENTLY and let the
-    // scheduler interleave; results are deterministic frames and the
-    // reduce keeps ks order, so the sweep output is unchanged.
-    // Concurrency discipline: a DEDICATED bounded pool (never the
-    // shared global EC — blocking trainings there can starve other
-    // users of it), a FINITE Await (a wedged job fails loudly instead
-    // of hanging the query forever), and each worker adopts the
-    // caller's Materialize scope token so the one-row pins it
-    // registers release with the enclosing `scoped` block rather
-    // than escaping it.
-    import java.util.concurrent.Executors
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration._
-    val scope = graft.std.Materialize.capturedScope()
-    val pool = Executors.newFixedThreadPool(math.min(ks.size, 4))
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    try {
-      val perK = ks.map { k =>
-        Future {
-          graft.std.Materialize.withScope(scope) {
-            val agg = kmeansTrainEx(ex, 1, k, iters, s"el$k", None)
-              .select(col("cluster_id"), col("n_members"), col("wcss"))
-              .distinct()
-              .agg(count(lit(1)).as("n_live_clusters"),
-                sum(col("n_members")).as("n_vectors"),
-                round(sum(col("wcss").cast("decimal(28,9)"))
-                  .cast("double"), 9).as("total_wcss"),
-                max(col("n_members")).as("largest_cluster"),
-                min(col("n_members")).as("smallest_cluster"))
-              .select(lit(k).as("k"), col("n_live_clusters"),
-                col("n_vectors"), col("total_wcss"),
-                col("largest_cluster"), col("smallest_cluster"))
-            // pin the one-row readout so the sweep's training jobs
-            // run inside the Future, not lazily at the caller's
-            // action
-            graft.std.Materialize.once(agg)
-          }
-        }
-      }
-      Await.result(Future.sequence(perK), 2.hours)
-        .reduce(_ unionByName _)
-    } catch { case e: Throwable =>
-      // a timed-out Await or one failed training must not leave the
-      // OTHER trainings running Spark jobs against a scope that is
-      // about to exit: interrupt them now. Any pin a straggler still
-      // registers lands unscoped (the token dies with the enclosing
-      // `scoped` block) and the next releaseAll reclaims it.
-      pool.shutdownNow(); throw e
-    } finally pool.shutdown()
+    require(ks.forall(_ >= 1), "need k >= 1")
+    val spark = vecs.sparkSession
+    import spark.implicits._
+    val chains = broadcast(ks.zipWithIndex.map { case (k, c) => (c, k) }
+      .toDF("_sub", "k"))
+    val vs = graft.std.Materialize.once(
+        kmeansVectors(pqExplode(vecs, 1, idCol, vecCol)))
+      .drop("_sub").crossJoin(chains)
+    val (_, assign) = kmeansChains(vs,
+      kmeansInit(concat(lit("el"), col("k").cast("string")), lit(0),
+        col("k")), iters)
+    assign.groupBy(col("_sub"), col("_cw"))
+      .agg(count(lit(1)).as("_n"),
+        round(sum(col("_dist")).cast("double"), 9).as("_wcss"))
+      .groupBy(col("_sub"))
+      .agg(count(lit(1)).as("n_live_clusters"),
+        sum(col("_n")).as("n_vectors"),
+        round(sum(col("_wcss").cast("decimal(28,9)")).cast("double"), 9)
+          .as("total_wcss"),
+        max(col("_n")).as("largest_cluster"),
+        min(col("_n")).as("smallest_cluster"))
+      .join(chains, Seq("_sub"))
+      .select(col("k"), col("n_live_clusters"), col("n_vectors"),
+        col("total_wcss"), col("largest_cluster"), col("smallest_cluster"))
   }
 
   /** Simplified-silhouette report (s30): per trained cluster, how

@@ -1,5 +1,7 @@
 package graft.std
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
@@ -52,23 +54,18 @@ object Materialize {
 
   private val owner = new ThreadLocal[AnyRef]
 
-  /** Tokens of currently-live [[scoped]] blocks. Registration checks
-    * membership so a worker thread that adopted a token via
-    * [[withScope]] but registers AFTER the owning block exited falls
-    * back to an UNSCOPED pin (reclaimed by the next [[releaseAll]])
-    * instead of tagging the pin with a dead token nothing will ever
-    * release — the permanent-leak hazard on e.g. an elbow-sweep
-    * training Future that outlives its Await timeout.
-    */
-  private val liveTokens =
-    scala.collection.mutable.Set.empty[AnyRef]
+  private[std] def register(release: () => Unit): Unit =
+    synchronized { pins += ((owner.get(), release)) }
 
-  private def register(release: () => Unit): Unit =
-    synchronized {
-      val tok = owner.get()
-      val effective =
-        if (tok != null && !liveTokens.contains(tok)) null else tok
-      pins += ((effective, release))
+  /** Run one release step, containing a NON-fatal failure (a block
+    * already gone, a context shutting down) so one bad pin never keeps
+    * the rest pinned; it is reported on stderr. A fatal error (an OOM,
+    * an interrupt) propagates.
+    */
+  private[graft] def releaseQuietly(release: => Unit): Unit =
+    try release
+    catch { case NonFatal(e) =>
+      System.err.println(s"[materialize] release failed: $e")
     }
 
   /** Compute `df` once and return a frame whose reads never re-execute
@@ -147,7 +144,7 @@ object Materialize {
     * for the other mode).
     */
   def releasePin(df: DataFrame): Unit = {
-    try { df.unpersist(false); () } catch { case _: Throwable => () }
+    releaseQuietly { df.unpersist(false); () }
     releaseCheckpoint(df)
   }
 
@@ -180,7 +177,7 @@ object Materialize {
       pins.clear(); pins ++= scopedPins
       unscoped.toList
     }
-    mine.foreach(p => try p._2() catch { case _: Throwable => () })
+    mine.foreach(p => releaseQuietly(p._2()))
   }
 
   /** Run `f` and release ONLY the pins it registered — the long-running
@@ -200,45 +197,16 @@ object Materialize {
     val token = new Object
     val prev = owner.get()
     owner.set(token)
-    synchronized { liveTokens += token }
     try f
     finally {
       owner.set(prev)
       val mine = synchronized {
-        liveTokens -= token
         val (s, rest) = pins.partition(_._1 eq token)
         pins.clear(); pins ++= rest
         s.toList
       }
-      mine.foreach(p => try p._2() catch { case _: Throwable => () })
+      mine.foreach(p => releaseQuietly(p._2()))
     }
-  }
-
-  /** Capture the calling thread's [[scoped]] token (null when
-    * unscoped) so work dispatched to ANOTHER thread can register its
-    * pins under the same enclosing scope via [[withScope]] — without
-    * this, `once` calls on worker threads register unscoped and
-    * escape the enclosing `scoped` block's release (the hazard the
-    * [[scoped]] doc warns about).
-    */
-  def capturedScope(): AnyRef = owner.get()
-
-  /** Run `f` on the current thread with pins registering under
-    * `token` (from [[capturedScope]]), restoring the thread's prior
-    * owner afterwards. The worker-thread half of the capture/adopt
-    * pair.
-    *
-    * The caller should still join/await its workers INSIDE the
-    * enclosing [[scoped]] block (so their pins release with it), but
-    * a straggler that registers after the block exits is safe: the
-    * token is no longer live, so registration falls back to an
-    * unscoped pin and the next [[releaseAll]] reclaims it — late
-    * release, never a leak.
-    */
-  def withScope[T](token: AnyRef)(f: => T): T = {
-    val prev = owner.get()
-    owner.set(token)
-    try f finally owner.set(prev)
   }
 
   /** Currently-held pin count (test hook). */

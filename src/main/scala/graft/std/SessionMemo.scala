@@ -70,7 +70,7 @@ final class SessionMemo(
         SessionMemo.recordBuild(tag)
         map.putIfAbsent(k, v) match {
           case Some(winner) =>
-            try Materialize.releasePin(v) catch { case _: Throwable => () }
+            Materialize.releaseQuietly(Materialize.releasePin(v))
             winner
           case None => v
         }
@@ -81,7 +81,7 @@ final class SessionMemo(
   def release(spark: SparkSession): Unit =
     map.keys.filter(_._1 eq spark).toList.foreach { k =>
       map.remove(k).foreach(f =>
-        try Materialize.releasePin(f) catch { case _: Throwable => () })
+        Materialize.releaseQuietly(Materialize.releasePin(f)))
     }
 
   /** Evict entries whose session has stopped. Their executor blocks died
@@ -92,7 +92,7 @@ final class SessionMemo(
   private def sweep(): Unit =
     map.keys.filter(k => stopped(k._1)).toList.foreach { k =>
       map.remove(k).foreach(f =>
-        try Materialize.releasePin(f) catch { case _: Throwable => () })
+        Materialize.releaseQuietly(Materialize.releasePin(f)))
     }
 
   private[graft] def entryCount(spark: SparkSession): Int =

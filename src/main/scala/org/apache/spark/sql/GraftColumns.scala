@@ -2,7 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.classic.ExpressionUtils
 
-import graft.functions.{BloomBits, BloomContains, DecDot18, DeflateRatio, DeflateRound9, DotProductD, KmvMins, LooSpanHashes, Md5Lane, NfcNormalize, SpanWindowHashes, TopSample, WordShingles}
+import graft.functions.{BloomBits, BloomContains, DecDot18, DeflateRatio, DeflateRound9, DotProductD, KmeansAssign, KmeansBook, KmvMins, LooSpanHashes, Md5Lane, NfcNormalize, SpanWindowHashes, TopSample, WordShingles}
 
 /** Typed analysis errors for graft's SQL function builders (the
   * message-only `AnalysisException` constructor is `private[sql]`,
@@ -36,6 +36,14 @@ object GraftColumns {
   def decDot18(a: Column, b: Column): Column =
     ExpressionUtils.column(DecDot18(
       ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+
+  /** Codegen'd k-means assign of `(_dim, _x)` pairs against a round's
+    * codebook, per chain — see [[KmeansAssign]].
+    */
+  def kmeansAssign(pairs: Column, chain: Column, book: KmeansBook): Column =
+    ExpressionUtils.column(KmeansAssign(
+      ExpressionUtils.expression(pairs), ExpressionUtils.expression(chain),
+      book))
 
   /** Codegen'd deflation bridge round(c − s·v, 9) per element — see
     * [[DeflateRound9]].

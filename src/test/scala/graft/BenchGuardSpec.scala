@@ -235,4 +235,48 @@ class BenchGuardSpec extends AnyFunSuite {
     // against only the prior record it slid under the 3x trigger
     assert(!Bench.isAnomalous(1.66, prior.get("t24")))
   }
+
+  test("record carries per-query codegen compiles and JIT ms, file only") {
+    // the codegen cache finding: a query whose warm reps still compile
+    // generated classes overruns Spark's 100-entry cache; the record
+    // must carry the counters, and the parser reads them back
+    val json = Bench.fileJson(Seq("q1" -> 0.5, "s26" -> 4.2),
+      canaryStart = Nil, canaryEnd = Nil, flaky = Nil, anomalous = Nil,
+      outPath = "/x.json", sfDir = "/data/sf0.1", reps = 1,
+      samples = Seq("q1" -> Seq(0.5), "s26" -> Seq(4.2)), retries = Nil,
+      codegen = Seq("q1" -> ((3L, 120L)), "s26" -> ((41L, 5300L))))
+    assert(Bench.parseNumMap(json, "codegen_compiles") ===
+      Map("q1" -> 3.0, "s26" -> 41.0))
+    assert(Bench.parseNumMap(json, "jit_ms") ===
+      Map("q1" -> 120.0, "s26" -> 5300.0))
+    assert(Bench.parseBaseline(json) === Map("q1" -> 0.5, "s26" -> 4.2))
+    // the stdout line stays lean
+    val head = Bench.headJson(Seq("q1" -> 0.5), Nil, Nil, Nil, Nil,
+      outPath = "/x.json", sfDir = "/data/sf0.1", _.toString)
+    assert(!head.contains("codegen_compiles") && !head.contains("jit_ms"))
+  }
+
+  test("codegen counters move when Spark compiles a new plan") {
+    val spark = SparkTestSession.spark
+    val (c0, j0) = Bench.codegenCounters()
+    // a constant no other plan uses: its generated class is new
+    val salt = System.nanoTime() % 1000003L
+    spark.range(10).selectExpr(s"id * $salt + 7919 AS v").collect()
+    val (c1, j1) = Bench.codegenCounters()
+    assert(c1 > c0, "a new plan shape must count a compile")
+    assert(j1 >= j0)
+  }
+
+  test("a failed record write is reported, never swallowed") {
+    // the record anchors the next run's guard: a swallowed failure left
+    // the stale one in place, so main now exits non-zero on false
+    val dir = java.nio.file.Files.createTempDirectory("bench_record")
+    val ok = dir.resolve("BENCH_FULL.json")
+    assert(Bench.writeRecord(ok.toString, "{}"))
+    assert(java.nio.file.Files.readString(ok) == "{}")
+    assert(!Bench.writeRecord(dir.toString, "{}"),
+      "a directory in the record's place must fail the write")
+    assert(!Bench.writeRecord(
+      dir.resolve("missing").resolve("BENCH_FULL.json").toString, "{}"))
+  }
 }

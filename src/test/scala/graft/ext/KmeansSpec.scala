@@ -462,4 +462,33 @@ class KmeansSpec extends AnyFunSuite {
       .toMap
     assert(got == expByC, s"got $got expected $expByC")
   }
+
+  test("batched elbow = per-k kmeansTrain (members, wcss) at k 2/4/8/16") {
+    // the elbow trains every k as one chain of a single loop; each
+    // chain must be exactly kmeansTrain with the chain's seed tag
+    // `el$k`, so the per-k readout rebuilt from kmeansTrain's
+    // per-cluster members and wcss must match the sweep bit-for-bit
+    val rnd = new scala.util.Random(26)
+    val df = (1 to 120).map { i =>
+      val blob = i % 5
+      (i.toLong, (0 until 6).map(d =>
+        blob * (if (d % 2 == 0) 1.5 else -0.75) + rnd.nextGaussian() * 0.4))
+    }.toDF("vec_id", "embedding")
+    val ks = Seq(2, 4, 8, 16)
+    val elbow = Similarity.kmeansElbow(df, ks = ks, iters = 4).collect()
+      .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2),
+        r.getDouble(3), r.getLong(4), r.getLong(5)))).toMap
+    val perK = ks.map { k =>
+      val clusters = Similarity.kmeansTrain(df, k, 4, seedTag = s"el$k")
+        .collect().map(r => r.getInt(1) -> ((r.getLong(4), r.getDouble(5))))
+        .distinct.map(_._2)
+      val total = clusters.map(c => BigDecimal(c._2)).sum
+        .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
+      k -> ((clusters.length.toLong, clusters.map(_._1).sum, total,
+        clusters.map(_._1).max, clusters.map(_._1).min))
+    }.toMap
+    graft.std.Materialize.releaseAll()
+    assert(elbow == perK, s"elbow $elbow vs per-k training $perK")
+    assert(perK(16)._1 > perK(2)._1, "larger k keeps more live clusters")
+  }
 }

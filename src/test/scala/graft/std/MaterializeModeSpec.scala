@@ -77,69 +77,26 @@ class MaterializeModeSpec extends AnyFunSuite {
     assert(!spark.sparkContext.getPersistentRDDs.contains(rddId))
   }
 
-  /** The r14 ADVICE hazard: a `once` inside `scoped` but dispatched to
-    * a worker thread registered UNSCOPED, so the scope's release left
-    * it pinned (and a later global releaseAll could drop it under a
-    * concurrent query). capturedScope/withScope closes the gap —
-    * worker-thread pins adopt the caller's token and release with the
-    * scoped block, exactly like same-thread pins.
+  /** Release is best-effort for ordinary failures only: a pin whose
+    * release throws a non-fatal exception must not keep the pins after
+    * it alive (or fail the query that released them), but an OOM or an
+    * interrupt must not be swallowed on the way out.
     */
-  test("withScope(capturedScope()) makes worker-thread pins release " +
-    "with the enclosing scoped block") {
+  test("a non-fatal release failure is contained; a fatal one propagates") {
     import spark.implicits._
-    def rddIdOf(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.logical match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-        case other => fail(s"expected LogicalRDD, got ${other.getClass}")
-      }
-    var adoptedId = -1
-    var strayId = -1
-    Materialize.scoped {
-      val token = Materialize.capturedScope()
-      val t = new Thread(() => {
-        // adopted: releases when the scope exits
-        adoptedId = rddIdOf(Materialize.withScope(token) {
-          Materialize.once(Seq(1, 2).toDF("v"))
-        })
-        // unadopted control: stays pinned past the scope exit
-        strayId = rddIdOf(Materialize.once(Seq(3, 4).toDF("v")))
-      })
-      t.start(); t.join()
-      assert(spark.sparkContext.getPersistentRDDs.contains(adoptedId))
-    }
-    val live = spark.sparkContext.getPersistentRDDs
-    assert(!live.contains(adoptedId),
-      "adopted pin must release with its scope")
-    assert(live.contains(strayId),
-      "the unadopted control registers outside the scope")
-    Materialize.releaseAll()
-    assert(!spark.sparkContext.getPersistentRDDs.contains(strayId))
-  }
-
-  /** The r15 ADVICE hazard: a worker that adopts a scope token but
-    * registers AFTER the scoped block exited (an elbow-sweep training
-    * Future surviving its Await timeout) used to tag the pin with a
-    * dead token that neither the scope (already released) nor
-    * releaseAll (skips owner != null) would ever free. Registration
-    * now checks token LIVENESS and falls back to an unscoped pin, so
-    * the next releaseAll reclaims the straggler.
-    */
-  test("pins registered under a dead scope token fall back to " +
-    "unscoped and releaseAll reclaims them") {
-    import spark.implicits._
-    var token: AnyRef = null
-    Materialize.scoped { token = Materialize.capturedScope() }
-    // scope has exited: the token is dead
-    val late = Materialize.withScope(token) {
-      Materialize.once(Seq(5, 6).toDF("v"))
-    }
-    val lateId = late.queryExecution.logical match {
+    Materialize.register(() => throw new IllegalStateException("gone"))
+    val pinned = Materialize.once(Seq(1, 2).toDF("v"))
+    val rddId = pinned.queryExecution.logical match {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
       case other => fail(s"expected LogicalRDD, got ${other.getClass}")
     }
-    assert(spark.sparkContext.getPersistentRDDs.contains(lateId))
     Materialize.releaseAll()
-    assert(!spark.sparkContext.getPersistentRDDs.contains(lateId),
-      "a dead-token pin must be reclaimable by releaseAll")
+    assert(!spark.sparkContext.getPersistentRDDs.contains(rddId),
+      "the pin after the failing release must still be freed")
+    Materialize.register(() => throw new OutOfMemoryError("simulated"))
+    intercept[OutOfMemoryError](Materialize.releaseAll())
+    intercept[InterruptedException](
+      Materialize.releaseQuietly(throw new InterruptedException()))
+    assert(Materialize.pinCount == 0)
   }
 }
